@@ -3,9 +3,9 @@
     python3 perfbench/run.py --workload interactive --seed 1 --seconds 15 --trace 0
 
 The run generates its tables from ``--seed``, computes every query's expected
-result with DuckDB, starts a ``local[4]`` Spark session through the engine's
-``configure``, runs two untimed warm passes (the first collects every result
-and checks it against DuckDB, the second uses the workload's sink), then runs
+result with DuckDB, starts a ``local[2]`` Spark session through the engine's
+``configure``, runs three untimed warm passes (the first collects every result
+and checks it against DuckDB, the others use the workload's sink), then runs
 whole passes over the workload, each in its own seeded order, for about
 ``--seconds`` seconds.
 
@@ -38,8 +38,11 @@ from workloads import COLLECT, NOOP, WORKLOADS
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 OUT = os.path.join(ROOT, ".perfbench")
-CORES = min(4, os.cpu_count() or 1)
-SHUFFLE_PARTITIONS = 8
+# Two task threads leave the other cores to the Python driver and the JVM's
+# compiler and GC threads, so a run does not compete with itself for cores.
+CORES = min(2, os.cpu_count() or 1)
+SHUFFLE_PARTITIONS = 4
+WARM_SINK_PASSES = 2
 MIN_PASSES = 3
 QUERY_TIMEOUT_S = 60.0
 RUN_LIMIT_S = 170  # whole-run guard; a run must end within 180 s
@@ -156,7 +159,11 @@ class Bench:
         from polars_ruby_spark.session import configure
 
         local = os.path.join(OUT, "spark-local")
-        java_opts = f"-Djava.io.tmpdir={os.path.join(OUT, 'tmp')} -XX:-UsePerfData"
+        # A fixed heap and a JIT that compiles after a tenth of the usual call
+        # counts let the timed passes start nearer the plateau of the warm-up
+        # curve.
+        java_opts = (f"-Djava.io.tmpdir={os.path.join(OUT, 'tmp')} -XX:-UsePerfData "
+                     "-Xms1g -XX:CompileThresholdScaling=0.1")
         with self.tracer.span("session.start"):
             t = time.perf_counter()
             builder = (SparkSession.builder.master(f"local[{CORES}]")
@@ -295,13 +302,17 @@ class Bench:
         return time.perf_counter() - t, order, times
 
     def warm(self):
-        """Two untimed passes: one collects every result and checks it against
-        DuckDB, one runs the workload's own sink.  The JIT keeps speeding the
-        engine up for about a pass after each query's first execution."""
+        """Untimed passes: one collects every result and checks it against
+        DuckDB, then ``WARM_SINK_PASSES`` run the workload's own sink.  The
+        JIT keeps speeding the engine up for ten or more passes; the steepest
+        part of that slope is spent here."""
         with self.tracer.span("session.warm"):
-            _, _, checked = self.run_pass("warm", COLLECT, check=True)
-            _, _, sunk = self.run_pass("warm", self.w.sink)
-        self.setup["warm_s"] = sum(checked.values()) + sum(sunk.values())
+            _, _, times = self.run_pass("warm", COLLECT, check=True)
+            spent = sum(times.values())
+            for _ in range(WARM_SINK_PASSES):
+                _, _, times = self.run_pass("warm", self.w.sink)
+                spent += sum(times.values())
+        self.setup["warm_s"] = spent
 
     def measure(self):
         """Whole passes for about ``seconds``: at least ``MIN_PASSES``; with

@@ -6,8 +6,8 @@ sf0.01 sizes.  The ``why`` lines are copied verbatim into
 ``BENCHMARK.json``.
 
 The lists are short because one run must fit its set-up (JVM start, Python
-workers, and two warm passes costing about 3.5 timed passes) and three or
-more timed passes into about a minute.  ``batch`` keeps the queries with the most
+workers, and three warm passes costing five to six timed passes) and three
+or more timed passes into about a minute.  ``batch`` keeps the queries with the most
 eager construct jobs (q107: 12), the salted n-gram exchange (q93) and an
 Arrow matmul in Python workers (q43); ``interactive`` keeps one cheap query
 per API family.
