@@ -2709,10 +2709,10 @@ def _events_stream(spark, sf_dir, n_files=1, max_files_per_trigger=None,
         lf = st.scan_stream(stage, spark=spark,
                             max_files_per_trigger=max_files_per_trigger)
         return LazyFrame(lf._sdf.select(*columns)), name
-    from polars_ruby_spark.sources.io import _ns_timestamp_cols
+    from polars_ruby_spark.sources.io import _ns_timestamp_cols, _parquet_files
 
     path = os.path.join(sf_dir, "events.parquet")
-    ns_cols = _ns_timestamp_cols(path)
+    ns_cols = _ns_timestamp_cols(_parquet_files(path))
     if ns_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     sch = spark.read.parquet(path).schema

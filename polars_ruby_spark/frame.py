@@ -549,16 +549,18 @@ class LazyFrame:
                         # re-execute their input — with k chained hooks
                         # that multiplies into ~2^k re-runs of the whole
                         # pipeline (measured: q166's six attaches hit 19 s
-                        # where one runs in ~0.5 s).  A LAZY localCheckpoint
+                        # where one runs in ~0.5 s).  A localCheckpoint
                         # between attaches materializes each stage once,
                         # making chains linear (q166 execute 19.3 s →
-                        # 0.75 s); the ~1 s of physical planning it costs
-                        # per stage at construction is a local[*] constant
-                        # a long-lived cluster amortizes, and the measured
-                        # alternative (persist) saves construct but pays
-                        # it back with cache-write overhead at execute.
-                        # Paid only from the SECOND hook on, so
-                        # single-attach binds are untouched.
+                        # 0.75 s).  It is NOT lazy under AQE: eager=False
+                        # still plans the input adaptively, which runs
+                        # every upstream shuffle stage as a Spark job
+                        # while the plan is built (9 of q107's construct
+                        # jobs come from here).  The measured alternative
+                        # (persist) saves construct but pays it back with
+                        # cache-write overhead at execute.  Paid only from
+                        # the SECOND hook on, so single-attach binds are
+                        # untouched.
                         sdf = sdf.localCheckpoint(eager=False)
                     sdf, tmp = e._global_ordinal_fn(sdf)
                     hook_cols[k] = tmp

@@ -428,7 +428,12 @@ def _hot_gram_salt(grams: DataFrame, gh_col: str,
 
     env = os.environ.get("SPARK_GRAFT_GRAM_SALT", "").strip()
     if env:
-        v = int(env)
+        try:
+            v = int(env)
+        except ValueError:
+            raise ValueError(
+                f"SPARK_GRAFT_GRAM_SALT must be an integer "
+                f"(0/1 = off, >1 = salt modulus), got {env!r}") from None
         return 0 if v <= 1 else v
     top, tot = (grams.select(F.col(gh_col).alias("__g__"))
                 .where(F.col("__g__").isNotNull())  # short-doc null grams

@@ -82,13 +82,16 @@ def with_row_index(sdf: DataFrame, name: str = ROW_IDX, offset: int = 0) -> Data
         # The two passes below (per-partition counts + the data path) would
         # each recompute the upstream sort: column pruning narrows the counts
         # branch's scan, so Catalyst's ReuseExchange never fires and a sorted
-        # input pays scan+range-shuffle TWICE.  A lazy localCheckpoint
+        # input pays scan+range-shuffle TWICE.  A localCheckpoint
         # materializes the sorted partitions once and both passes read them
         # back (the same trade connected_components already makes; measured
         # ~1.7× on sorted-ordinal queries at sf0.1, and at cluster scale it
-        # replaces a full second scan+shuffle with local reads).  Unsorted
-        # inputs skip this: their recompute is a plain scan, cheaper than a
-        # materialization.
+        # replaces a full second scan+shuffle with local reads).  It is NOT
+        # lazy under AQE: eager=False still plans the input adaptively, which
+        # runs its upstream shuffle stages as Spark jobs while the plan is
+        # built (2 of q107's construct jobs come from here).
+        # Unsorted inputs skip this: their recompute is a plain scan, cheaper
+        # than a materialization.
         sdf = sdf.localCheckpoint(eager=False)
     base = sdf.withColumn(_MONO, F.monotonically_increasing_id()).withColumn(
         _PID, F.spark_partition_id()

@@ -7,7 +7,11 @@
 
 from __future__ import annotations
 
+import functools
+import glob
+import os
 from typing import Any
+from urllib.parse import urlparse
 
 from pyspark.sql import SparkSession
 
@@ -29,25 +33,87 @@ def _schema_arg(schema):
     return schema
 
 
-def _ns_timestamp_cols(source) -> list[str]:
+#: Confs whose session value changes the schema Spark infers for a parquet
+#: file set; their values are part of the schema memo's key.
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.caseSensitive",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.timestampType",
+)
+
+
+def _parquet_files(path: str) -> list[str] | None:
+    """Every file ``path`` resolves to, sorted, walking directories and
+    expanding globs.  None when this process cannot list the path the way
+    Spark does (a non-local scheme, Hadoop ``{a,b}`` alternation)."""
+    url = urlparse(path)
+    if url.scheme == "file":
+        path = url.path
+    elif url.scheme or "{" in path:
+        return None
+    roots = (sorted(glob.glob(path, include_hidden=True))
+             if any(ch in path for ch in "*?[") else [path])
+    names = []
+    for root in roots:
+        if os.path.isdir(root):
+            for d, _, fs in os.walk(root, followlinks=True):
+                names += [os.path.join(d, f) for f in fs]
+        else:
+            names.append(root)
+    return sorted(names)
+
+
+def _snapshot(files: list[str] | None) -> tuple | None:
+    """The file part of the schema memo's key: ``(path, inode, size,
+    mtime_ns, ctime_ns)`` of a one-file set (a file, or a directory or glob
+    holding one).  None, so the read infers, for a path without a listing,
+    for several files or none, and when the stat fails.  A multi-file set is
+    left out because a first read would list it twice in Spark, once to
+    infer and once with the schema, and on a large directory that second
+    listing costs more than the inference job."""
+    if files is None or len(files) != 1:
+        return None
+    try:
+        st = os.stat(files[0])
+    except OSError:
+        return None
+    return (files[0], st.st_ino, st.st_size, st.st_mtime_ns, st.st_ctime_ns)
+
+
+@functools.lru_cache(maxsize=256)
+def _inferred_schema(spark: SparkSession, path: str, snapshot: tuple, confs: tuple):
+    """The schema Spark infers for ``path``, memoized by its file
+    ``snapshot`` and the inference confs' session values ``confs``."""
+    return spark.read.parquet(path).schema
+
+
+def _read_parquet(spark: SparkSession, path: str, files: list[str] | None):
+    """``spark.read.parquet(path)``.  A repeat read of an unchanged one-file
+    set under the same inference confs passes the schema Spark inferred the
+    first time, which skips the footer-reading inference job."""
+    snapshot = _snapshot(files)
+    if snapshot is None:
+        return spark.read.parquet(path)
+    confs = tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)
+    return spark.read.schema(_inferred_schema(spark, path, snapshot, confs)).parquet(path)
+
+
+def _ns_timestamp_cols(files: list[str] | None) -> list[str]:
     """Columns stored as parquet TIMESTAMP(NANOS) — Spark 4 refuses them
     unless read as Long (spark.sql.legacy.parquet.nanosAsLong); we then cast
-    ns→µs ourselves (polars Datetime('ns') → Spark µs, SURVEY §1.3)."""
-    import glob as _glob
-    import os as _os
+    ns→µs ourselves (polars Datetime('ns') → Spark µs, SURVEY §1.3).
 
-    path = str(source)
-    probe = path
-    if _os.path.isdir(path):
-        files = sorted(_glob.glob(_os.path.join(path, "*.parquet")))
-        if not files:
-            return []
-        probe = files[0]
-    elif any(ch in path for ch in "*?["):
-        files = sorted(_glob.glob(path))
-        if not files:
-            return []
-        probe = files[0]
+    Probes the footer of the first data file of the scan's listing
+    ``files`` (hidden ``_``/``.`` files are skipped, as Spark skips them)."""
+    if not files:
+        return []
+    data = [f for f in files if not os.path.basename(f).startswith(("_", "."))]
+    probe = data[0] if data else files[0]
     try:
         import pyarrow.parquet as pq
 
@@ -66,18 +132,32 @@ def _ns_timestamp_cols(source) -> list[str]:
 def scan_parquet(source, hive_partitioning: bool = True, n_rows: int | None = None,
                  row_index_name: str | None = None, spark=None, **kw):
     """io/parquet.rb:163 — lazy parquet scan; stats pruning / hive partitions /
-    globs are Spark-native."""
+    globs are Spark-native.
+
+    The first scan of a file set runs one Spark job, the schema inference
+    that reads the parquet footers.  A repeat scan of the same path that
+    resolves to one unchanged file runs none: it reuses the schema inferred
+    the first time.  A scan infers afresh when that file was replaced,
+    renamed or rewritten since (its inode, size, mtime or ctime differs),
+    when the path now resolves to another file or to several, or when one of
+    the inference confs changed: ``spark.sql.parquet.mergeSchema``,
+    ``.binaryAsString``, ``.int96AsTimestamp``, ``.inferTimestampNTZ.enabled``,
+    ``spark.sql.legacy.parquet.nanosAsLong``, ``spark.sql.caseSensitive``,
+    ``spark.sql.sources.partitionColumnTypeInference.enabled`` or
+    ``spark.sql.timestampType``.  Paths that resolve to several files, and
+    paths with a non-local scheme (``s3a://``, ``hdfs://``), always infer."""
     from pyspark.sql import functions as F
 
     from ..frame import LazyFrame
     from ..operators.row_index import with_row_index
 
     s = _spark(spark)
-    source = _materialize_source(source, ".parquet")
-    ns_cols = _ns_timestamp_cols(source)
+    path = str(_materialize_source(source, ".parquet"))
+    files = _parquet_files(path)
+    ns_cols = _ns_timestamp_cols(files)
     if ns_cols:
         s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    sdf = s.read.parquet(str(source))
+    sdf = _read_parquet(s, path, files)
     for c in ns_cols:
         # integer `div` keeps full precision (double division would lose
         # sub-µs bits on ~1e18 nanosecond epochs)
@@ -102,10 +182,9 @@ def read_parquet(source, n_rows: int | None = None, row_index_name: str | None =
 
 def read_parquet_schema(source, spark=None) -> dict:
     """io/parquet.rb:127 — schema without reading data."""
-    sdf = _spark(spark).read.parquet(str(source))
+    path = str(source)
+    sdf = _read_parquet(_spark(spark), path, _parquet_files(path))
     return {f.name: f.dataType for f in sdf.schema.fields}
-
-
 
 
 #: temp files spooled for IO-object sources; lazy scans reference the path

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 import polars_ruby_spark as pl
 from polars_ruby_spark.operators import dedup, multimodal, similarity, text
 from pyspark.sql import functions as F
@@ -322,6 +324,17 @@ def test_dup_ngram_fraction_null_gram_rows_survive(spark):
     rows = {r["doc_id"]: r for r in dup_ngram_fraction(df, n=3).collect()}
     assert rows[3]["n_ngrams"] == 0 and rows[3]["dup_frac"] is None
     assert rows[1]["n_dup"] == 1 and rows[2]["n_dup"] == 1  # shared "a b c"
+
+
+def test_gram_salt_env_forces_and_validates(monkeypatch):
+    """SPARK_GRAFT_GRAM_SALT overrides the hot-gram probe without touching
+    the gram table; a value that is not an integer names the variable."""
+    for env, want in (("0", 0), ("1", 0), (" 16 ", 16)):
+        monkeypatch.setenv("SPARK_GRAFT_GRAM_SALT", env)
+        assert dedup._hot_gram_salt(None, "gh") == want
+    monkeypatch.setenv("SPARK_GRAFT_GRAM_SALT", "lots")
+    with pytest.raises(ValueError, match="SPARK_GRAFT_GRAM_SALT.*'lots'"):
+        dedup._hot_gram_salt(None, "gh")
 
 
 def test_repetition_signals_values(spark):

@@ -9,10 +9,12 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 import traceback
 
-sys.path.insert(0, "/root/repo")
+# the engine and registry of the checkout this script lives in
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 ARGS = [a for a in sys.argv[1:] if not a.startswith("--json")]
 JSON_OUT = next((a.split("=", 1)[1] for a in sys.argv[1:]
